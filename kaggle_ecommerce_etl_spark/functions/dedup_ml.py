@@ -655,7 +655,7 @@ def jaccard_pairs_prefix(
       the `+ rand(42)*0.0` term is the §4.4 optimizer barrier that
       stops the threshold filter being pushed into the join and
       re-inlining the set-op (pinned by
-      tests/test_dedup_ml.py::test_prefix_verify_single_setop_plan)."""
+      tests/test_queries_ext.py::test_single_evaluation_plan_pins)."""
     from pyspark.sql.window import Window
 
     t_eff = threshold - _ROUND4_MARGIN

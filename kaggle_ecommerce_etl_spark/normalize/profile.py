@@ -17,6 +17,12 @@ per-branch success counts collected up front make the second scan
 unnecessary. At 100 TB, each profiling scan IS the cost of the
 pipeline, so the count matters.
 
+Each gate counts the non-NULL results of the very SQL text the
+transform projects with (``casts`` / ``tokens`` builders), so a gate is
+by construction its coercion's post-coercion non-null count, and
+building the profile of a wide frame costs one py4j call per aggregate
+rather than dozens per Column node.
+
 Per-column work is role-aware (role derived from the column name, as
 in the reference): date columns only pay the date-parse probe, month
 columns the date+prefix probes, everything else the numeric probe —
@@ -32,19 +38,24 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kaggle_ecommerce_etl_spark.normalize.casts import (
-    MONTH_PREFIX_MAP,
-    strip_numeric_noise,
+    normalize_month_expr_prefix,
     tolerant_date,
+    tolerant_numeric,
 )
 from kaggle_ecommerce_etl_spark.normalize.tokens import na_token_to_null
-from kaggle_ecommerce_etl_spark.util import qcol
+from kaggle_ecommerce_etl_spark.util import qcol, qident, sql_str
+
+
+def _count_true(predicate: str) -> str:
+    """SQL text: rows where ``predicate`` holds (NULL over no rows)."""
+    return f"sum(CAST({predicate} AS BIGINT))"
 
 
 def null_counts(df: DataFrame) -> DataFrame:
     """One-row DataFrame: per-column null count (op 18)."""
     return df.agg(
         *[
-            F.sum(qcol(c).isNull().cast("long")).alias(c)
+            F.expr(f"{_count_true(f'{qident(c)} IS NULL')} AS {qident(c)}")
             for c in df.columns
         ]
     )
@@ -66,7 +77,7 @@ def summary_stats_exact(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     Shape: unpivot via ``stack`` (narrow projection, no shuffle) then
     ONE groupBy over n_cols groups — a single exchange regardless of
     column count."""
-    stack_args = ", ".join(f"'{c}', CAST(`{c}` AS DOUBLE)" for c in cols)
+    stack_args = ", ".join(f"{sql_str(c)}, CAST({qident(c)} AS DOUBLE)" for c in cols)
     long = df.select(
         F.expr(f"stack({len(cols)}, {stack_args}) AS (col_name, value)")
     )
@@ -94,18 +105,13 @@ def column_role(name: str) -> str:
     return "candidate"
 
 
-def _prefix_mapped(col) -> F.Column:
-    prefix = F.lower(F.substring(F.trim(col), 1, 3))
-    return prefix.isin(list(MONTH_PREFIX_MAP)).cast("long")
-
-
 def column_profile(df: DataFrame, string_cols: Sequence[str] | None = None) -> dict:
     """ONE job computing every gate the transform layer needs.
 
     Returns ``{"__rows__": n, col: {"nulls", "numeric_ok", "date_ok",
-    "prefix_ok", "role"}}`` — per-branch SUCCESS COUNTS, so the caller
-    can both pick the coercion and know the post-coercion null count
-    without a second scan.
+    "prefix_ok", "keep_ok", "role"}}`` — per-branch SUCCESS COUNTS, so
+    the caller can both pick the coercion and know the post-coercion
+    null count without a second scan.
     """
     if string_cols is None:
         string_cols = [
@@ -113,42 +119,28 @@ def column_profile(df: DataFrame, string_cols: Sequence[str] | None = None) -> d
         ]
     roles = {c: column_role(c) for c in string_cols}
 
-    aggs = [F.count(F.lit(1)).alias("__rows__")]
-    for c in df.columns:
-        aggs.append(F.sum(qcol(c).isNull().cast("long")).alias(f"nulls__{c}"))
+    # (column, gate, SQL text of the coercion whose non-NULL rows it counts)
+    gates = []
     for c in string_cols:
         role = roles[c]
         if role in ("date", "month"):
-            aggs.append(
-                F.sum(tolerant_date(qcol(c)).isNotNull().cast("long")).alias(f"dateok__{c}")
-            )
+            gates.append((c, "date_ok", tolerant_date(c)))
         if role == "month":
-            aggs.append(F.sum(_prefix_mapped(qcol(c))).alias(f"prefixok__{c}"))
+            gates.append((c, "prefix_ok", normalize_month_expr_prefix(c)))
         if role == "candidate":
-            aggs.append(
-                F.sum(
-                    strip_numeric_noise(qcol(c)).try_cast("double").isNotNull().cast("long")
-                ).alias(f"numok__{c}")
-            )
-            # non-null AFTER NA-token canonicalization + trim (the
-            # else-branch's post-transform null count)
-            aggs.append(
-                F.sum(na_token_to_null(qcol(c)).isNotNull().cast("long")).alias(
-                    f"keepok__{c}"
-                )
-            )
-    row = df.agg(*aggs).collect()[0].asDict()
+            gates.append((c, "numeric_ok", tolerant_numeric(c)))
+            # the else-branch's post-transform non-null count
+            gates.append((c, "keep_ok", na_token_to_null(c)))
+    counts = [_count_true(f"{qident(c)} IS NULL") for c in df.columns]
+    counts += [_count_true(f"{e} IS NOT NULL") for _, _, e in gates]
+    row = df.agg(F.expr("count(1)"), *map(F.expr, counts)).collect()[0]
 
-    out: dict = {"__rows__": row["__rows__"]}
-    for c in df.columns:
-        out[c] = {
-            "nulls": row[f"nulls__{c}"],
-            "numeric_ok": row.get(f"numok__{c}"),
-            "keep_ok": row.get(f"keepok__{c}"),
-            "date_ok": row.get(f"dateok__{c}"),
-            "prefix_ok": row.get(f"prefixok__{c}"),
-            "role": roles.get(c),
-        }
+    out: dict = {"__rows__": row[0]}
+    for c, nulls in zip(df.columns, row[1:]):
+        out[c] = {"nulls": nulls, "numeric_ok": None, "keep_ok": None,
+                  "date_ok": None, "prefix_ok": None, "role": roles.get(c)}
+    for (c, gate, _), value in zip(gates, row[1 + len(df.columns):]):
+        out[c][gate] = value
     return out
 
 

@@ -3,29 +3,33 @@ inner ``transform()``, reference ecommerce_s3_to_pg.py:123-214).
 
 Two-phase execution, made explicit:
 
-1. **Profile** — ONE aggregation job over the already NA-canonicalized
-   frame computes every data-dependent gate: per-branch success counts
-   (numeric / date / month-prefix) and per-column null counts.
-2. **Plan** — emit a single lazy projection applying, per column:
+1. **Profile** — ONE aggregation job over the raw frame computes every
+   data-dependent gate: per-branch success counts (numeric / date /
+   month-prefix / NA-canonicalized keep) and per-column null counts.
+2. **Plan** — emit ONE ``selectExpr`` projection applying, per column:
    - name contains ``date``  → tolerant parse → ISO ``yyyy-MM-dd`` string
    - name contains ``month`` → month-name normalization (datetime branch
      iff any value parses, else 3-letter-prefix branch)  [pg.py:157-169]
    - ≥90% numeric-parseable  → noise-strip + double cast + round(2)
      [pg.py:175-184]
-   - remaining string cols   → trim                      [pg.py:190-192]
-   then drop all-null columns [pg.py:202-204] — decided from the SAME
-   profile (each branch's success count IS its post-coercion non-null
-   count), so no second scan.
+   - remaining string cols   → NA tokens to NULL, then trim
+     [pg.py:190-197]
+   and leaving out all-null columns [pg.py:202-204] — decided from the
+   SAME profile (each branch's success count IS its post-coercion
+   non-null count), so no second scan.
 
-The emitted plan is pure Column expressions — Catalyst fuses it into
-one codegen stage over the scan; total data reads: profile scan + the
-consumer's execution. No UDFs anywhere.
+Both phases are SQL text from the ``casts`` / ``tokens`` builders: the
+profile is one ``agg`` and the projection one ``selectExpr``, so the
+driver pays one py4j call per expression instead of one per Column
+node, and Catalyst fuses the projection into one codegen stage over
+the scan. The projection is lazy: each execution of the result re-reads
+its input (the batch job materializes every cleaned table once for
+that reason). No UDFs anywhere.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kaggle_ecommerce_etl_spark.normalize.columns import normalize_column_names
@@ -37,7 +41,7 @@ from kaggle_ecommerce_etl_spark.normalize.casts import (
 )
 from kaggle_ecommerce_etl_spark.normalize.profile import column_profile
 from kaggle_ecommerce_etl_spark.normalize.tokens import na_token_to_null
-from kaggle_ecommerce_etl_spark.util import qcol
+from kaggle_ecommerce_etl_spark.util import qident
 
 NUMERIC_GATE = 0.9  # reference: converted.notna().sum() > 0.9*len(df)
 
@@ -45,9 +49,9 @@ NUMERIC_GATE = 0.9  # reference: converted.notna().sum() > 0.9*len(df)
 def transform(df: DataFrame, numeric_gate: float = NUMERIC_GATE) -> DataFrame:
     """Rule-driven cleanup of a raw all-string frame (see module doc).
 
-    Emits ONE ``select`` projection (not layered withColumns passes):
-    the coercion branches null out NA tokens inherently ('' / 'NA' fail
-    every parse), and the keep-branch composes trim + NA-canonicalize
+    Emits ONE flat projection (not layered withColumns passes): the
+    coercion branches null out NA tokens inherently ('' / 'NA' fail
+    every parse), and the keep-branch composes NA-canonicalize + trim
     at the expression level. A flat projection keeps Catalyst analysis
     cost linear in columns — layered projections made plan compilation
     the dominant cost for wide frames.
@@ -61,34 +65,24 @@ def transform(df: DataFrame, numeric_gate: float = NUMERIC_GATE) -> DataFrame:
     n_rows = prof["__rows__"]
 
     select_exprs = []
-    nonnull_after: dict[str, int] = {}
     for c in df.columns:
         info = prof[c]
-        if c not in string_cols:
-            select_exprs.append(qcol(c))
-            nonnull_after[c] = n_rows - info["nulls"]
-            continue
         role = info["role"]
-        if role == "date":
-            expr = date_to_iso(qcol(c))
-            nonnull_after[c] = info["date_ok"]
+        if c not in string_cols:
+            expr, nonnull = qident(c), n_rows - (info["nulls"] or 0)
+        elif role == "date":
+            expr, nonnull = date_to_iso(c), info["date_ok"]
         elif role == "month":
             if info["date_ok"]:
-                expr = normalize_month_expr_datetime(qcol(c))
-                nonnull_after[c] = info["date_ok"]
+                expr, nonnull = normalize_month_expr_datetime(c), info["date_ok"]
             else:
-                expr = normalize_month_expr_prefix(qcol(c))
-                nonnull_after[c] = info["prefix_ok"]
+                expr, nonnull = normalize_month_expr_prefix(c), info["prefix_ok"]
         elif n_rows > 0 and info["numeric_ok"] is not None and (
             info["numeric_ok"] / n_rows > numeric_gate
         ):
-            expr = tolerant_numeric(qcol(c))
-            nonnull_after[c] = info["numeric_ok"]
+            expr, nonnull = tolerant_numeric(c), info["numeric_ok"]
         else:
-            expr = na_token_to_null(F.trim(qcol(c)))
-            nonnull_after[c] = info["keep_ok"]
-        select_exprs.append(expr.alias(c))
-
-    out = df.select(*select_exprs)
-    dead = [c for c in out.columns if nonnull_after.get(c, 1) == 0]
-    return out.drop(*dead) if dead else out
+            expr, nonnull = f"trim({na_token_to_null(c)})", info["keep_ok"]
+        if nonnull != 0:  # all-NULL after coercion: drop the column
+            select_exprs.append(f"{expr} AS {qident(c)}")
+    return df.selectExpr(*select_exprs)

@@ -8,7 +8,9 @@ Reference behavior re-expressed:
 - data_source / loaded_at audit columns (pg.py:537-608)
 
 All pure narrow expressions — no shuffle, fully codegen'd, filters
-push toward the scan where the source format allows.
+push toward the scan where the source format allows. Per-column
+expressions are SQL text (``util.qident`` names), one py4j call per
+filter or projection however wide the frame.
 """
 
 from __future__ import annotations
@@ -17,16 +19,19 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from kaggle_ecommerce_etl_spark.util import qcol
+from kaggle_ecommerce_etl_spark.util import qident
 
 
-def filter_mostly_null_rows(df: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Keep rows whose NULL fraction across all columns is < threshold."""
-    n = len(df.columns)
-    null_count = sum(
-        (qcol(c).isNull().cast("int") for c in df.columns), F.lit(0)
+def filter_mostly_null_rows(
+    df: DataFrame, threshold: float = 0.5, cols: Sequence[str] | None = None
+) -> DataFrame:
+    """Keep rows whose NULL fraction across ``cols`` (default: all
+    columns) is < threshold."""
+    cols = list(df.columns if cols is None else cols)
+    nulls = " + ".join(f"CAST({qident(c)} IS NULL AS INT)" for c in cols)
+    return df.filter(
+        f"({nulls}) / CAST({len(cols)} AS DOUBLE) < CAST({float(threshold)!r} AS DOUBLE)"
     )
-    return df.filter((null_count / F.lit(float(n))) < F.lit(threshold))
 
 
 def drop_missing_critical(df: DataFrame, critical: Sequence[str]) -> DataFrame:
@@ -40,13 +45,13 @@ def align_columns(
 ) -> DataFrame:
     """Project to the target (name, sql_type) list; absent columns are
     NULL-typed literals. Output column order == target order."""
-    cols = [
-        qcol(name).cast(sql_type).alias(name)
-        if name in df.columns
-        else F.lit(None).cast(sql_type).alias(name)
-        for name, sql_type in target
-    ]
-    return df.select(*cols)
+    return df.selectExpr(
+        *[
+            f"CAST({qident(name) if name in df.columns else 'NULL'} AS {sql_type}) "
+            f"AS {qident(name)}"
+            for name, sql_type in target
+        ]
+    )
 
 
 def add_audit_columns(

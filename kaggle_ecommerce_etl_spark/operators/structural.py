@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark.normalize.columns import normalize_name
-from kaggle_ecommerce_etl_spark.util import qcol
+from kaggle_ecommerce_etl_spark.util import qident, sql_str
 
 ORDINAL = "__row_ordinal"
 
@@ -40,15 +40,13 @@ def with_file_order(df: DataFrame, coalesce_to_one: bool = True) -> DataFrame:
 def all_letter_string_row(df: DataFrame) -> Column:
     """Reference ``is_all_strings`` predicate (pg.py:45-55): every cell
     non-null and containing at least one ASCII letter."""
+    letters = sql_str("[a-zA-Z]")
     conds = [
-        qcol(c).isNotNull() & qcol(c).rlike("[a-zA-Z]")
+        f"({qident(c)} IS NOT NULL AND {qident(c)} RLIKE {letters})"
         for c in df.columns
         if c != ORDINAL
     ]
-    out = F.lit(True)
-    for c in conds:
-        out = out & c
-    return out
+    return F.expr(" AND ".join(["true", *conds]))
 
 
 def split_misaligned_rowgroups(
@@ -79,7 +77,7 @@ def split_misaligned_rowgroups(
     part1 = ordered.filter(F.col(ORDINAL) < split_id).drop(ORDINAL)
 
     new_names = [(c, hdr[c]) for c in data_cols if hdr[c] is not None]
-    part2 = ordered.filter(F.col(ORDINAL) > split_id).select(
-        *[qcol(c).alias(normalize_name(str(new))) for c, new in new_names]
+    part2 = ordered.filter(F.col(ORDINAL) > split_id).selectExpr(
+        *[f"{qident(c)} AS {qident(normalize_name(str(new)))}" for c, new in new_names]
     )
     return part1, part2

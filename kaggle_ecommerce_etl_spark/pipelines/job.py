@@ -9,9 +9,18 @@ per table (op 3) → idempotently upsert into the warehouse tables
 Scale notes:
 - per-file routing happens on the LISTING (driver metadata), not the
   data; each route's files are read as one multi-file scan.
-- all cleaned outputs of one run share lazily-built plans; nothing is
-  collected to the driver except the 1-row embedded-header fetch of
-  the international split (documented in operators.structural).
+- each cleaned table is computed ONCE per run: every route's output
+  is materialized with an eager ``localCheckpoint`` inside the route's
+  ``try`` (so an execution failure stays isolated to that route; the
+  idiom of ``sources.csv_source``, storage reclaimed when the frame is
+  garbage-collected), and the CSV sink and the caller's warehouse
+  upsert both read the materialized rows instead of re-running the
+  chain from the raw CSVs.
+  Audit columns (``loaded_at``) therefore carry the same value in the
+  CSV and in the warehouse. Amazon's two outputs share one
+  materialization. Nothing is collected to the driver except the 1-row
+  embedded-header fetch of the international split (documented in
+  operators.structural).
 - the international report needs file order → read single-partition
   per file (these report files are tens of MB; at scale this is the
   one operator that intentionally does not parallelize per file —
@@ -25,6 +34,7 @@ import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
 
@@ -53,6 +63,22 @@ def discover_files(raw_dir: str, minutes: int | None = None) -> list[str]:
             continue
         out.append(path)
     return out
+
+
+def _materialize_split(clean: DataFrame, flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Materialize two outputs of one plan in ONE job: tag and union
+    them (Spark reuses their common exchange, so the shared chain runs
+    once), checkpoint, and split the tag back out."""
+    side = "__flagged"
+    both = (
+        clean.withColumn(side, F.lit(False))
+        .unionByName(flagged.withColumn(side, F.lit(True)))
+        .localCheckpoint(eager=True)
+    )
+    return (
+        both.filter(~F.col(side)).drop(side),
+        both.filter(F.col(side)).drop(side),
+    )
 
 
 def run_batch(
@@ -89,7 +115,7 @@ def run_batch(
     if "amazon" in routes:
         try:
             raw = read_csv_with_encoding_fallback(spark, routes["amazon"])
-            clean, flagged = clean_amazon_sale(raw)
+            clean, flagged = _materialize_split(*clean_amazon_sale(raw))
             results["amazon_sale"] = clean
             results["amazon_sale_version"] = flagged
         except Exception as e:  # noqa: BLE001 — defensive posture (pg.py:229-233)
@@ -98,7 +124,7 @@ def run_batch(
     if "sale" in routes:
         try:
             raw = read_csv_with_encoding_fallback(spark, routes["sale"])
-            results["sale_report"] = clean_sale(raw)
+            results["sale_report"] = clean_sale(raw).localCheckpoint(eager=True)
         except Exception as e:  # noqa: BLE001
             logger.exception("sale route failed: %s", routes["sale"])
             errors["sale"] = str(e)
@@ -110,7 +136,8 @@ def run_batch(
         for path in routes["international"]:
             try:
                 raw = read_csv_with_encoding_fallback(spark, path)
-                parts.append(clean_international_sale(with_file_order(raw)))
+                part = clean_international_sale(with_file_order(raw))
+                parts.append(part.localCheckpoint(eager=True))
             except Exception as e:  # noqa: BLE001
                 logger.exception("international file failed: %s", path)
                 errors[path] = str(e)

@@ -409,7 +409,7 @@ def q_na_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", _na_case_col().alias("raw")
     )
-    return o.select("o_orderkey", na_token_to_null(F.col("raw")).alias("val"))
+    return o.selectExpr("o_orderkey", f"{na_token_to_null('raw')} AS val")
 
 
 ORACLE_NA = f"""
@@ -454,10 +454,8 @@ def q_tolerant_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(m == 2, F.lit("n/a"))
         .otherwise(_dec_str_col())
     )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        tolerant_numeric(raw).alias("amount"),
+    return li.select("l_orderkey", "l_linenumber", raw.alias("raw")).selectExpr(
+        "l_orderkey", "l_linenumber", f"{tolerant_numeric('raw')} AS amount"
     )
 
 
@@ -486,7 +484,9 @@ def q_date_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(m == 1, F.date_format(d, "yyyy-MM-dd"))
         .otherwise(F.lit("not a date"))
     )
-    return o.select("o_orderkey", date_to_iso(raw).alias("date_iso"))
+    return o.select("o_orderkey", raw.alias("raw")).selectExpr(
+        "o_orderkey", f"{date_to_iso('raw')} AS date_iso"
+    )
 
 
 ORACLE_DATE = """
@@ -508,8 +508,8 @@ def q_month_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(m == 2, F.lit("garbage"))
         .otherwise(F.date_format(d, "MMMM"))
     )
-    return o.select(
-        "o_orderkey", normalize_month_expr_datetime(raw).alias("month_name")
+    return o.select("o_orderkey", raw.alias("raw")).selectExpr(
+        "o_orderkey", f"{normalize_month_expr_datetime('raw')} AS month_name"
     )
 
 
@@ -532,8 +532,8 @@ def q_month_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(m == 3, F.lit("zzz"))
         .otherwise(F.lit("DECEMBER"))
     )
-    return o.select(
-        "o_orderkey", normalize_month_expr_prefix(raw).alias("month_name")
+    return o.select("o_orderkey", raw.alias("raw")).selectExpr(
+        "o_orderkey", f"{normalize_month_expr_prefix('raw')} AS month_name"
     )
 
 

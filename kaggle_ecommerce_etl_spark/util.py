@@ -64,11 +64,33 @@ def outgrows_broadcast(df, margin: float = 1.0) -> bool:
     return sz > thr * margin if sz >= 0 else False
 
 
+def qident(name: str) -> str:
+    """SQL text of a column reference by EXACT name — backtick-quoted
+    (embedded backticks doubled) so dots, spaces, quotes and other
+    specials in raw CSV headers (e.g. ``Design No.``) are neither
+    parsed as nested-field access nor able to end the identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value: str) -> str:
+    """SQL string literal for ``value``. Quote and backslash are
+    backslash-escaped and control characters become ``\\uXXXX``
+    escapes, so any Python string round-trips through Spark's parser
+    (default ``spark.sql.parser.escapedStringLiterals=false``)."""
+    out = []
+    for ch in value:
+        if ch in "'\\":
+            out.append("\\" + ch)
+        elif ord(ch) < 0x20:
+            out.append("\\u%04x" % ord(ch))
+        else:
+            out.append(ch)
+    return "'" + "".join(out) + "'"
+
+
 def qcol(name: str) -> Column:
-    """Column reference by EXACT name — backtick-quoted so dots, spaces
-    and other specials in raw CSV headers (e.g. ``Design No.``) are not
-    parsed as nested-field access."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    """Column reference by EXACT name (see :func:`qident`)."""
+    return F.col(qident(name))
 
 
 def ensure_min_partitions(df, n: int | None = None):

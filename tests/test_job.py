@@ -102,3 +102,41 @@ def test_run_batch_isolates_corrupt_file(spark, tmp_path):
     assert "sale_report" in results and results["sale_report"].count() == 4
     assert "amazon_sale" not in results
     assert list(errors) == ["amazon"] and errors["amazon"]
+
+
+def test_loaded_at_same_in_csv_and_warehouse(spark, tmp_path):
+    """run_batch computes each cleaned table once, so the audit
+    timestamp the CSV sink writes is the one the upsert loads (a
+    re-executed plan would stamp a second current_timestamp())."""
+    from pyspark.sql import functions as F
+
+    from kaggle_ecommerce_etl_spark.sinks.jdbc import (
+        DERBY_DRIVER,
+        derby_memory_url,
+        write_upsert_jdbc,
+    )
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    _write_fixtures(raw)
+    out = tmp_path / "cleaned"
+    results = run_batch(spark, str(raw), str(out))
+    url, props = derby_memory_url("t_loaded_at"), {"driver": DERBY_DRIVER}
+    appended = write_upsert_jdbc(
+        results["international_sale"], url, "international_sale",
+        ["sku", "data_source"], properties=props,
+    )
+    assert appended.count() == 8
+
+    # the CSV sink writes timestamps at millisecond precision
+    csv_ts = {
+        r.ts for r in spark.read.option("header", True)
+        .csv(f"{out}/international_sale")
+        .select(F.to_timestamp("loaded_at").alias("ts")).distinct().collect()
+    }
+    loaded_ts = {
+        r.ts for r in spark.read.jdbc(url, "international_sale", properties=props)
+        .select(F.date_trunc("millisecond", "loaded_at").alias("ts"))
+        .distinct().collect()
+    }
+    assert len(csv_ts) == 1 and csv_ts == loaded_ts

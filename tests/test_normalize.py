@@ -43,18 +43,22 @@ def test_na_tokens_all_null(spark):
 
 
 def test_tolerant_numeric(spark):
+    """Every NUMERIC_NOISE character strips, including the ones that
+    need escaping inside the SQL literal of translate's char set."""
     df = spark.createDataFrame(
-        [("$1,234.567",), ("(12.3)",), (" 42 ",), ("abc",), (None,)], ["v"]
+        [("$1,234.567",), ("(12.3)",), (" 42 ",), ("abc",), (None,),
+         ("\x0b7.5\f",), ("\t1 000\r\n",), ("\\9",), ("'3'",)],
+        ["v"],
     )
-    out = [r.n for r in df.select(tolerant_numeric(F.col("v")).alias("n")).collect()]
-    assert out == [1234.57, 12.3, 42.0, None, None]
+    out = [r.n for r in df.selectExpr(f"{tolerant_numeric('v')} AS n").collect()]
+    assert out == [1234.57, 12.3, 42.0, None, None, 7.5, 1000.0, None, None]
 
 
 def test_date_to_iso(spark):
     df = spark.createDataFrame(
         [("04-30-22",), ("2022-04-30",), ("04/30/2022",), ("junk",)], ["v"]
     )
-    out = [r.d for r in df.select(date_to_iso(F.col("v")).alias("d")).collect()]
+    out = [r.d for r in df.selectExpr(f"{date_to_iso('v')} AS d").collect()]
     assert out == ["2022-04-30", "2022-04-30", "2022-04-30", None]
 
 
@@ -62,9 +66,9 @@ def test_month_branches(spark):
     df = spark.createDataFrame(
         [("2022-03-15",), ("jan",), ("FEB ",), ("garbage",)], ["v"]
     )
-    dt = [r.m for r in df.select(normalize_month_expr_datetime(F.col("v")).alias("m")).collect()]
+    dt = [r.m for r in df.selectExpr(f"{normalize_month_expr_datetime('v')} AS m").collect()]
     assert dt == ["March", None, None, None]
-    pfx = [r.m for r in df.select(normalize_month_expr_prefix(F.col("v")).alias("m")).collect()]
+    pfx = [r.m for r in df.selectExpr(f"{normalize_month_expr_prefix('v')} AS m").collect()]
     # '202' (datetime prefix) and 'gar' are unmapped in the prefix branch
     assert pfx == [None, "January", "February", None]
 
@@ -129,3 +133,36 @@ def test_summary_stats_contract(spark, sf_dir):
         for pct, name in (("25%", "p25"), ("50%", "p50"), ("75%", "p75")):
             approx, ex = float(stats[pct][c]), exact[c][name]
             assert abs(approx - ex) <= max(0.01 * abs(ex), 1e-9), (c, pct, approx, ex)
+
+
+def test_transform_round_trip_budget(spark, monkeypatch):
+    """transform() builds its profile and projection as SQL text, one
+    py4j call per expression. On this 20-column all-string frame the
+    Column-composition builders made 9,140–9,635 Python→JVM calls per
+    transform() and the SQL-text builders make ≈ 350 (PySpark 4.1); the
+    bound is a quarter of 9,140, so a return to per-node Column
+    building fails here."""
+    names = ([f"Amount {i}" for i in range(8)] + [f"Note-{i}" for i in range(6)]
+             + [f"Order Date {i}" for i in range(3)] + [f"Month {i}" for i in range(3)])
+
+    def row(j):
+        return ([f"${j},{i}00.5" for i in range(8)]
+                + [f" n{j} " if j % 3 else "NA" for _ in range(6)]
+                + ["04/30/2022"] * 3 + ["2022-03-15" if j % 2 else "mar"] * 3)
+
+    df = spark.createDataFrame(
+        [row(j) for j in range(40)], ", ".join(f"`{n}` string" for n in names)
+    )
+    transform(df)  # warm: first-use JVM lookups are not the builders' cost
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    out = transform(df)
+    monkeypatch.undo()
+    assert len(out.columns) == 20
+    assert len(calls) <= 9140 // 4, len(calls)

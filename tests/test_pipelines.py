@@ -114,3 +114,110 @@ def test_classify_file():
     assert classify_file("kaggle/raw/International Sale Report_2022.csv") == "international"
     assert classify_file("kaggle/raw/Sale Report_2022.csv") == "sale"
     assert classify_file("kaggle/raw/Expense Report.csv") is None
+
+
+# Raw headers the SQL-text builders must quote: a backtick, a single
+# quote, a dot, spaces and hyphens. Roles follow the normalized name
+# (date / month / numeric-candidate).
+HOSTILE = {
+    "Buyer's `Ref`": "buyer's_`ref`",
+    "Promo. Amt": "promo._amt",
+    "Ship's-Date": "ship's_date",
+    "Rpt `Month`": "rpt_`month`",
+}
+
+
+def _hostile_values(i):
+    # numeric noise from every class translate strips, incl. the ones
+    # that need escaping inside its SQL literal (\x0b, \f, \t)
+    amt = ["$1,000.50", " (2.25) ", "\t7\x0b", "\f8.125"][i % 4]
+    return [f" ref-{i} ", amt, "04/30/2022", "feb"]
+
+
+def _hostile_expected(i):
+    amt = [1000.5, 2.25, 7.0, 8.13][i % 4]
+    return {"buyer's_`ref`": f"ref-{i}", "promo._amt": amt,
+            "ship's_date": "2022-04-30", "rpt_`month`": "February"}
+
+
+def _write_csv(path, header, rows):
+    import csv
+
+    with open(path, "w", newline="") as fh:
+        w = csv.writer(fh, lineterminator="\n")
+        w.writerow(header)
+        w.writerows(rows)
+    return str(path)
+
+
+def test_hostile_headers_through_transform_and_pipelines(spark, tmp_path):
+    """Every clean-layer expression is SQL text over a header that comes
+    from outside the program: quoting must keep such names intact
+    through transform and all three pipelines, and values exact."""
+    from kaggle_ecommerce_etl_spark.normalize import transform
+    from kaggle_ecommerce_etl_spark.sources.csv_source import (
+        read_csv_with_encoding_fallback,
+    )
+
+    extra = list(HOSTILE)
+
+    def rows_of(out, key):
+        return {r[key]: r.asDict() for r in out.collect()}
+
+    # transform alone
+    path = _write_csv(tmp_path / "t.csv", ["Row Id"] + extra,
+                      [[str(i)] + _hostile_values(i) for i in range(12)])
+    out = transform(read_csv_with_encoding_fallback(spark, path))
+    assert out.columns == ["row_id"] + list(HOSTILE.values())
+    got = rows_of(out, "row_id")
+    assert got == {float(i): {"row_id": float(i), **_hostile_expected(i)}
+                   for i in range(12)}
+
+    # amazon: extras ride through dedup, the NA-row filter, transform
+    # and the conflict split
+    amazon = [list(_amazon_row(i, f"O-{i}", "04-30-22", f"{i}0.00")) + _hostile_values(i)
+              for i in range(12)]
+    path = _write_csv(tmp_path / "a.csv", AMAZON_COLS + extra, amazon)
+    clean, flagged = clean_amazon_sale(read_csv_with_encoding_fallback(spark, path))
+    assert flagged.count() == 0
+    assert clean.columns[-4:] == list(HOSTILE.values())
+    got = rows_of(clean, "order_id")
+    for i in range(12):
+        assert {k: got[f"O-{i}"][k] for k in HOSTILE.values()} == _hostile_expected(i)
+        assert got[f"O-{i}"]["amount"] == float(f"{i}0.00")
+
+    # sale: 'Design No.' keeps its dot until the rename
+    sale = [[str(i), f"sku-{i}", f"D-{i}", str(i), "Top"] + _hostile_values(i)
+            for i in range(12)]
+    path = _write_csv(tmp_path / "s.csv",
+                      ["index", "SKU Code", "Design No.", "Stock", "Category"] + extra,
+                      sale)
+    out = clean_sale(read_csv_with_encoding_fallback(spark, path))
+    assert out.columns == ["sku_code", "design_no", "stock", "category",
+                           *HOSTILE.values()]
+    got = rows_of(out, "design_no")
+    for i in range(12):
+        assert got[f"D-{i}"] == {"sku_code": f"sku-{i}", "design_no": f"D-{i}",
+                                 "stock": float(i), "category": "Top",
+                                 **_hostile_expected(i)}
+
+    # international: part 2's names come from the embedded header row,
+    # i.e. from DATA, and carry the same specials
+    head = ["index", "CUSTOMER", "DATE", "Months", "GROSS AMT"]
+    rows = [[str(i), f"c{i}", "2022-01-05", "jan", f"${i}00"] + _hostile_values(i)
+            for i in range(3)]
+    rows.append(["idx", "CUSTOMER", "DATE", "Months", "GROSS AMT"] + extra)
+    rows += [[str(i), f"d{i}", "2022-02-01", "feb", f"{i}5"] + _hostile_values(i)
+             for i in range(3)]
+    path = _write_csv(tmp_path / "i.csv", head + extra, rows)
+    out = clean_international_sale(
+        with_file_order(read_csv_with_encoding_fallback(spark, path))
+    )
+    assert out.columns[:10] == ["customer", "date", "months", "style", "sku",
+                                "pcs", "rate", "gross_amount", "size", "stock"]
+    got = {(r.data_source, r.customer): r for r in out.collect()}
+    assert len(got) == 6
+    for i in range(3):
+        p1, p2 = got[("part1", f"C{i}")], got[("part2", f"D{i}")]
+        assert (p1.date, p1.months, p1.gross_amount) == ("2022-01-05", "January", i * 100.0)
+        assert (p2.date, p2.months, p2.gross_amount) == ("2022-02-01", "February", i * 10 + 5.0)

@@ -70,7 +70,7 @@ def test_tolerant_numeric_roundtrip_property(spark, rows):
     )
     out = {
         r.i: r.v
-        for r in df.select("i", tolerant_numeric(F.col("raw")).alias("v")).collect()
+        for r in df.selectExpr("i", f"{tolerant_numeric('raw')} AS v").collect()
     }
     for i, (s, x) in enumerate(rendered):
         assert out[i] is not None and abs(out[i] - round(x, 2)) < 1e-9, (s, x)
